@@ -2,7 +2,8 @@ package graft.plans
 
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Attribute,
-  AttributeReference, EqualTo, Expression}
+  AttributeReference, EqualTo, Expression, InheritAnalysisRules,
+  RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment,
   DeleteFromTable, InsertAction, LogicalPlan, MergeIntoTable, SubqueryAlias,
   UpdateAction, UpdateTable}
@@ -68,10 +69,28 @@ object GdxDmlRule extends Rule[LogicalPlan] {
     * Catalyst tree (or an UnresolvedAttribute rewrite of it) inside the
     * command would trip checkAnalysis, which walks command expressions
     * too. */
-  private def bySql(e: Expression): String = e.transform {
+  private def bySql(e: Expression): String = mapAttrs(e) {
     // drop catalog/table qualifiers: the engine's frame has bare names
     case a: AttributeReference => a.withQualifier(Seq.empty)
   }.sql
+
+  /** `e.transform(rule)`, also applied inside a RuntimeReplaceable with
+    * InheritAnalysisRules (`BETWEEN`, `nvl`, …): its `.sql` prints its
+    * `parameters`, which are not children, so a plain transform never
+    * reaches the attributes that get printed. The replacement is that
+    * node's child, so the transform itself rewrites it, once. */
+  private def mapAttrs(e: Expression)(
+      rule: PartialFunction[Expression, Expression]): Expression =
+    e.transform(rule.orElse {
+      case r: RuntimeReplaceable with InheritAnalysisRules =>
+        def one(x: Any): AnyRef = x match {
+          case c: Expression if c eq r.replacement => c
+          case c: Expression => mapAttrs(c)(rule)
+          case cs: Seq[_] => cs.map(one)
+          case other => other.asInstanceOf[AnyRef]
+        }
+        r.makeCopy(r.productIterator.map(one).toArray)
+    })
 
   private def fail(msg: String): Nothing =
     throw new org.apache.spark.sql.AnalysisException(
@@ -187,7 +206,7 @@ object GdxDmlRule extends Rule[LogicalPlan] {
       fail("gdx MERGE: duplicate source column names " +
         srcNames.diff(srcNames.distinct).distinct.mkString(", "))
     def sideSql(e: Expression, allowT: Boolean, allowS: Boolean,
-                what: String): String = e.transform {
+                what: String): String = mapAttrs(e) {
       case a: AttributeReference if tids.contains(a) =>
         if (!allowT) fail(s"gdx MERGE: $what may not reference the " +
           s"target column ${a.name}")
@@ -235,6 +254,8 @@ object GdxDmlRule extends Rule[LogicalPlan] {
     // file-pruning hints, extracted PER CONJUNCT of the ON condition
     // (`ON t.k = s.k AND t.k >= a AND t.k < b` is the range-scoped
     // point-update shape — pruning must not die on the And):
+    // Both need an INTEGRAL key: only its zone map is a k-range (a
+    // STRING key's is not, and its bounds cannot be cast to BIGINT).
     //  - pruneKey: a conjunct equating the TARGET's key (first) column
     //    with a source-only expression → mergeGeneral pre-scans the
     //    source's key min/max and carries non-overlapping target files
@@ -255,9 +276,10 @@ object GdxDmlRule extends Rule[LogicalPlan] {
     // silently skip matching files. The analyzer widens the LITERAL
     // side of a BIGINT compare, never the key, so bare-only loses no
     // real pruning.
+    val prunable = graft.sources.GdxSource.integralKey(keyName.dataType)
     def tKey(e: Expression): Boolean = e match {
       case a: AttributeReference =>
-        tids.contains(a) && a.exprId == keyName.exprId
+        prunable && tids.contains(a) && a.exprId == keyName.exprId
       case _ => false
     }
     def litLong(e: Expression): Option[Long] =

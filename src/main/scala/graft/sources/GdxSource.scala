@@ -4382,13 +4382,11 @@ object GdxSource {
     * rewrite; [[compact]] later rewrites DV-carrying files clean, and
     * [[vacuum]] reaps superseded sidecars.
     *
-    * Execution shape: one distributed pass — a task per candidate file
-    * parses its lines (already-deleted positions skipped), the Catalyst
-    * `condition` filters them, and surviving (file, position) pairs
-    * aggregate per file; DV sidecars are written executor-side (UUID
-    * names: a retried task leaves an unreferenced orphan, never a
-    * clobbered committed sidecar). Zone maps pre-prune: files whose
-    * k-range cannot intersect a k-only condition never even get a task.
+    * Execution shape: one Spark action — each task parses its files'
+    * lines (already-deleted positions skipped), the Catalyst
+    * `condition` filters them, and the task writes the DV sidecar of
+    * every file it touched (UUID names: a retried task leaves an
+    * unreferenced orphan, never a clobbered committed sidecar).
     * The commit is a FULL manifest publish at `readVersion + 1` under
     * CAS — a concurrent commit surfaces as conflict and the delete
     * recomputes, same serializable loop as [[merge]]. Time travel to
@@ -4408,9 +4406,12 @@ object GdxSource {
     * a torn mix (the Delta UPDATE-with-deletion-vectors shape). `set`
     * maps column name → new-value Column (may reference any snapshot
     * column); untouched columns carry over. Cost at 100 TB: one
-    * zone-map-scoped scan of candidate files + data files proportional
-    * to MATCHED rows, never a table rewrite. Same CAS/retry contract
-    * as [[delete]]. Returns (committed version, rows updated). */
+    * Spark action that scans the live files and writes, task-side, the
+    * DV sidecars plus data files proportional to MATCHED rows — never
+    * a table rewrite. CHECK constraints and a non-NULL key are enforced
+    * over the new images; a violation commits nothing. Same CAS/retry
+    * contract as [[delete]]. Returns (committed version, rows
+    * updated). */
   def update(spark: SparkSession, dir: String,
              condition: org.apache.spark.sql.Column,
              set: Map[String, org.apache.spark.sql.Column],
@@ -4418,54 +4419,34 @@ object GdxSource {
     mutateWithDvs(spark, dir, condition, rewrite = Some(set), maxRetries)
 
   /** Shared engine for DELETE (rewrite = None) and UPDATE (rewrite =
-    * Some(set)): scan candidates under the snapshot's full schema,
-    * write DV sidecars for matched positions, optionally write the
-    * rewritten rows as new data files, publish one full manifest under
-    * CAS. */
+    * Some(set)): ONE Spark action over the snapshot's live rows. Each
+    * row matching `condition` is projected to its position (`_file`,
+    * `_pos`) and, for UPDATE, its new image; [[dmlPass]] then writes
+    * the DV sidecars and the images' data files task-side and returns
+    * the counts. From those the driver refuses a NULL key or a CHECK
+    * violation (nothing commits; the pass's files are orphans for
+    * [[vacuum]]) and otherwise publishes one full manifest under CAS. */
   private def mutateWithDvs(spark: SparkSession, dir: String,
                             condition: org.apache.spark.sql.Column,
                             rewrite: Option[
                               Map[String, org.apache.spark.sql.Column]],
                             maxRetries: Int): (Int, Long) = {
     import org.apache.spark.sql.functions._
-    import spark.implicits._
     val conf0 = driverConf()
     val sconf = new SerializableHadoopConf(conf0)
+    val root = java.util.Locale.ROOT
     var attempt = 0
     while (true) {
       val readV = decidedHead(dir, conf0)
-      val entries = committedEntries(dir, conf0,
-        if (readV > 0) readV else -1)
+      val ver = if (readV > 0) readV else -1
+      val entries = committedEntries(dir, conf0, ver)
       if (entries.isEmpty) return (readV, 0L)
-      val dvByName = entries.map(e => e.name -> e.dv).toMap
-      val dirStr = dir
-      val tblSchema = committedSchema(dir, conf0,
-        if (readV > 0) readV else -1)
-      val tblColmap = committedColmap(dir, conf0,
-        if (readV > 0) readV else -1)
-      val live = liveFrame(spark, dirStr, entries, tblSchema, sconf,
-        tblColmap)
-      // DELETE consumes the matched frame exactly once (the DV write),
-      // so checkpointing it first is a full-width extra job per
-      // statement; UPDATE's matched rows feed three consumers (DV
-      // write, constraint probe, rewrite), where one materialization
-      // still wins and keeps the consumers consistent under retries.
-      // The UPDATE checkpoint is LAZY: the DV-sidecar write is the
-      // first consumer and drains every partition (groupBy over the
-      // full matched set), so it doubles as the materializing job —
-      // the eager form paid a separate full-width line-parse job per
-      // UPDATE statement for the same blocks.
-      val matched =
-        if (rewrite.isEmpty) live.filter(condition)
-        else live.filter(condition).localCheckpoint(eager = false)
-      val newDvs = writeDvSidecars(matched.select("_file", "_pos"),
-        dirStr, dvByName, sconf)
-      if (newDvs.isEmpty) return (readV, 0L)
-      // UPDATE: the matched rows, with `set` applied, land as fresh
-      // data files (same line format, written executor-side with UUID
-      // names — a lost CAS leaves only vacuumable orphans)
-      val rewrittenEntries: Seq[GdxFileEntry] = rewrite match {
-        case None => Seq.empty
+      val tblSchema = committedSchema(dir, conf0, ver)
+      val tblColmap = committedColmap(dir, conf0, ver)
+      val constraints = committedConstraints(dir, conf0)
+      val images: Seq[org.apache.spark.sql.Column] = rewrite match {
+        case None =>
+          tblSchema.fields.toSeq.map(f => lit(null).cast(f.dataType).as(f.name))
         case Some(set) =>
           // SQL UPDATE semantics: every SET expression is evaluated
           // against the OLD row — simultaneous assignment, so
@@ -4474,57 +4455,43 @@ object GdxSource {
           // sequential withColumn chain would feed each assignment
           // the previous one's output (and make >4-assignment results
           // depend on Map iteration order)
-          val byName = set.map { case (k, c) =>
-            k.toLowerCase(java.util.Locale.ROOT) -> c }
-          val unknown = byName.keySet.diff(tblSchema.fieldNames
-            .map(_.toLowerCase(java.util.Locale.ROOT)).toSet)
+          val byName = set.map { case (k, c) => k.toLowerCase(root) -> c }
+          val unknown = byName.keySet.diff(
+            tblSchema.fieldNames.map(_.toLowerCase(root)).toSet)
           require(unknown.isEmpty, "gdx update: SET references " +
             s"unknown column(s) ${unknown.mkString(",")}")
-          val updatedRows = matched.drop("_file", "_pos").select(
-            tblSchema.fieldNames.map { f =>
-              byName.get(f.toLowerCase(java.util.Locale.ROOT))
-                .map(_.as(f)).getOrElse(col(f))
-            }: _*)
-          // UPDATE's rewrite path must enforce CHECK constraints like
-          // every other write: ALL constraints are validated in one
-          // aggregate job over the rewritten (matched) rows before any
-          // file lands — a violation aborts with nothing committed
-          // (SQL semantics, NULL passes)
-          val checks = committedConstraints(dirStr, conf0)
-          if (checks.nonEmpty) {
-            val aggs = checks.map { case (n, sql) =>
-              count(when(not(coalesce(expr(sql), lit(true))), 1)).as(n) }
-            val counts = updatedRows.agg(aggs.head, aggs.tail: _*).head()
-            checks.zipWithIndex.foreach { case ((n, sql), i) =>
-              val bad = counts.getLong(i)
-              if (bad > 0) throw new GdxConstraintViolationException(
-                s"gdx update: $bad updated row(s) would violate CHECK " +
-                  s"constraint $n ($sql)")
-            }
+          tblSchema.fields.toSeq.map { f =>
+            byName.get(f.name.toLowerCase(root)).map(_.cast(f.dataType))
+              .getOrElse(col(f.name)).as(f.name)
           }
-          writeDataFiles(updatedRows, dirStr, tblSchema, sconf,
-            tblColmap)
       }
-      val dvFor = newDvs.map(r => r._1 -> r._2).toMap
-      val updated = entries.map(e =>
-        dvFor.get(e.name).map(d => e.copy(dv = Some(d))).getOrElse(e)) ++
-        rewrittenEntries
+      val op = if (rewrite.isEmpty) DmlDelete else DmlUpdate
+      // liveFrame keeps each file's rows in one partition, and a
+      // filter + project keeps them there: no shuffle is needed
+      val pass = liveFrame(spark, dir, entries, tblSchema, sconf, tblColmap)
+        .filter(condition)
+        .select(images ++ Seq(col("_file"), col("_pos"), lit(op).as("__op"),
+          lit(false).as("__pair"), lit(0).as("__h")): _*)
+      // only UPDATE writes images for the CHECKs to gate
+      val checks = if (rewrite.isEmpty) Seq.empty else constraints
+      val t = dmlPass(pass, dir, tblSchema, tblColmap, sconf, checks,
+        entries.map(e => e.name -> e.dv).toMap,
+        byFile = false, checkPairs = false)
+      if (t.dvs.isEmpty) return (readV, 0L)
+      t.refuse("update", "updated", tblSchema, checks)
+      val updated = t.withDvs(entries) ++ t.files
       // CAS publish of the full manifest at readV + 1 (schema and
       // constraints carried)
-      val lines = headerLines(tblSchema,
-        committedConstraints(dirStr, conf0), tblColmap,
-        committedPartitionCol(dirStr, conf0)) ++
+      val lines = headerLines(tblSchema, constraints, tblColmap,
+        committedPartitionCol(dir, conf0)) ++
         updated.sortBy(_.name).map(_.manifestLine)
-      val base = new Path(dir)
-      val fs = base.getFileSystem(conf0)
-      val published = publishExclusive(fs, conf0,
-        manifestFor(dir, readV + 1), lines)
-      if (published) {
+      val fs = new Path(dir).getFileSystem(conf0)
+      if (publishExclusive(fs, conf0, manifestFor(dir, readV + 1), lines)) {
         writeLines(fs, manifest(dir), lines)
-        val touched = newDvs.map(_._3).sum
+        val touched = t.upd + t.del
         // only a DELETE removes rows (UPDATE rewrites them 1:1) —
         // a large one invalidates the ANALYZE sidecar
-        if (rewrite.isEmpty) decayColStats(dirStr, conf0, touched)
+        if (rewrite.isEmpty) decayColStats(dir, conf0, touched)
         return (readV + 1, touched)
       }
       attempt += 1 // lost the race; orphan sidecars/files await vacuum
@@ -4534,38 +4501,143 @@ object GdxSource {
     (-1, -1L) // unreachable
   }
 
-  /** Write DV sidecars for the `(_file, _pos)` pairs in `positions`:
-    * one task-side sidecar per touched file, each folding the file's
-    * EXISTING deleted positions in (a DV supersedes, never chains).
-    * Executor-side UUID names — a retried task or a lost CAS leaves
-    * only unreferenced orphans for [[vacuum]], never a clobbered
-    * committed sidecar. Returns (fileName, dvName, newlyDeleted). */
-  private def writeDvSidecars(positions: org.apache.spark.sql.DataFrame,
-                              dirStr: String,
-                              dvByName: Map[String, Option[String]],
-                              sconf: SerializableHadoopConf)
-      : Array[(String, String, Long)] = {
-    import positions.sparkSession.implicits._
+  // `__op` codes of a [[dmlPass]] row, which double as the indices of
+  // their row counts in [[DmlTally.counts]]
+  private final val DmlInsert = 1
+  private final val DmlUpdate = 2
+  private final val DmlDelete = 3
+  // the other [[DmlTally.counts]] slots: duplicate matched pairs, NULL
+  // keys, then one violation count per CHECK
+  private final val TallyDups = 0
+  private final val TallyNullKeys = 4
+  private final val TallyChecks = 5
+
+  /** What one [[dmlPass]] wrote and counted, summed over its tasks:
+    * the new data files, the new DV sidecar of each touched file, and
+    * `counts` = (duplicate matches, inserted, updated, deleted, NULL
+    * keys, violations of each CHECK in order). */
+  private[graft] final case class DmlTally(files: Seq[GdxFileEntry],
+                                    dvs: Map[String, String],
+                                    counts: Array[Long]) {
+    def dups: Long = counts(TallyDups)
+    def ins: Long = counts(DmlInsert)
+    def upd: Long = counts(DmlUpdate)
+    def del: Long = counts(DmlDelete)
+
+    def +(o: DmlTally): DmlTally = {
+      // two sidecars for one file would drop one task's positions
+      val split = dvs.keySet.intersect(o.dvs.keySet)
+      if (split.nonEmpty) throw new IllegalStateException(
+        s"gdx dml: rows of ${split.head} reached more than one task")
+      DmlTally(files ++ o.files, dvs ++ o.dvs,
+        counts.zip(o.counts).map { case (a, b) => a + b })
+    }
+
+    /** Raise the statement's refusals, in order: a NULL key in a new
+      * image, then the first violated CHECK (`what`/`rows` name the
+      * statement in the message). */
+    def refuse(what: String, rows: String, tblSchema: StructType,
+               checks: Seq[(String, String)]): Unit = {
+      if (counts(TallyNullKeys) > 0) throw new IllegalArgumentException(
+        s"gdx $what: ${counts(TallyNullKeys)} $rows row(s) have a NULL key " +
+          s"(${tblSchema.fields.head.name}) — the key column is required")
+      checks.zipWithIndex.foreach { case ((n, sql), i) =>
+        val bad = counts(TallyChecks + i)
+        if (bad > 0) throw new GdxConstraintViolationException(
+          s"gdx $what: $bad $rows row(s) would violate CHECK " +
+            s"constraint $n ($sql)")
+      }
+    }
+
+    /** `entries` with each touched file's DV replaced by the new one. */
+    def withDvs(entries: Seq[GdxFileEntry]): Seq[GdxFileEntry] =
+      entries.map(e => dvs.get(e.name).map(d => e.copy(dv = Some(d)))
+        .getOrElse(e))
+  }
+
+  /** ONE task-side write pass of row-level DML, run as a single Spark
+    * action. `pass` carries, for every row the statement touches or
+    * must check: its new image in the table's columns (schema order,
+    * first; NULL when it has none), then `_file`/`_pos` (the old
+    * image's position; NULL for an insert), `__op` (DmlInsert,
+    * DmlUpdate, DmlDelete, or 0 = untouched), `__pair` (a matched
+    * target/source pair) and `__h` (a spread hash for rows without a
+    * position). With `byFile` the rows are repartitioned by `_file`;
+    * otherwise the caller guarantees that each file's rows share one
+    * partition. Each task then writes its images to one data file
+    * through [[DataFileSink]] (a NULL-key image is counted, never
+    * written), writes one DV sidecar per touched file (the file's
+    * existing positions folded in — a DV supersedes, never chains),
+    * counts duplicate pairs when `checkPairs`, and evaluates every
+    * CHECK over the images. All names are UUIDs: a retried task, a
+    * refused statement or a lost CAS leaves only unreferenced orphans
+    * for [[vacuum]], never a clobbered committed file. */
+  private def dmlPass(pass: org.apache.spark.sql.DataFrame, dirStr: String,
+                      tblSchema: StructType, colmap: Option[Colmap],
+                      sconf: SerializableHadoopConf,
+                      checks: Seq[(String, String)],
+                      dvByName: Map[String, Option[String]],
+                      byFile: Boolean, checkPairs: Boolean): DmlTally = {
     import org.apache.spark.sql.functions._
-    positions
-      .groupBy("_file")
-      .agg(collect_list("_pos").as("_dels"))
-      .as[(String, Seq[Long])]
-      .map { case (name, dels) =>
-        val base = new Path(dirStr)
-        val fs = base.getFileSystem(sconf.conf)
-        val old = dvByName(name).map(d =>
-          GdxSource.readDvPositions(fs, GdxSource.entryPath(dirStr, d)))
-          .getOrElse(java.util.Collections.emptySet[Long]())
-        val all = new java.util.TreeSet[Long](old)
-        dels.foreach(all.add(_))
+    // shredded columns re-derive from their variant source before the
+    // CHECKs see the images (generated-always)
+    val imaged = col("__op") === DmlInsert || col("__op") === DmlUpdate
+    val flagged = deriveShreds(pass, tblSchema).select(col("*") +:
+      checks.zipWithIndex.map { case ((_, sql), i) =>
+        (imaged && not(coalesce(expr(sql), lit(true)))).as(s"__c$i")
+      }: _*)
+    val grouped =
+      if (!byFile) flagged
+      else flagged.repartition(when(col("_file").isNull, col("__h"))
+        .otherwise(hash(col("_file"))))
+    // row layout: images 0 until n, then _file, _pos, __op, __pair,
+    // __h at n to n + 4, then one CHECK flag each from n + 5
+    val n = tblSchema.length
+    val nChecks = checks.length
+    val layout = writeLayout(tblSchema, colmap)
+    val lanes = statLanes(tblSchema)
+    grouped.mapPartitions { (it: Iterator[org.apache.spark.sql.Row]) =>
+      val sink = new DataFileSink(dirStr, tblSchema, layout, lanes,
+        sconf.conf, "")
+      val counts = new Array[Long](TallyChecks + nChecks)
+      val touched = new java.util.HashMap[String, java.util.TreeSet[Long]]()
+      val pairs = new java.util.HashMap[String, java.util.HashSet[Long]]()
+      try it.foreach { r =>
+        val op = r.getInt(n + 2)
+        if (checkPairs && r.getBoolean(n + 3) &&
+            !pairs.computeIfAbsent(r.getString(n),
+              _ => new java.util.HashSet[Long]()).add(r.getLong(n + 1)))
+          counts(TallyDups) += 1
+        if (op > 0) counts(op) += 1
+        if (op == DmlInsert || op == DmlUpdate) {
+          if (r.isNullAt(0)) counts(TallyNullKeys) += 1 else sink.add(r)
+          var c = 0
+          while (c < nChecks) {
+            if (r.getBoolean(n + 5 + c)) counts(TallyChecks + c) += 1
+            c += 1
+          }
+        }
+        if (op == DmlUpdate || op == DmlDelete)
+          touched.computeIfAbsent(r.getString(n),
+            _ => new java.util.TreeSet[Long]()).add(r.getLong(n + 1))
+      } finally sink.close()
+      val base = new Path(dirStr)
+      val fs = base.getFileSystem(sconf.conf)
+      val dvs = Map.newBuilder[String, String]
+      touched.forEach { (name, all) =>
+        dvByName(name).foreach(d =>
+          all.addAll(readDvPositions(fs, entryPath(dirStr, d))))
         val dvName = s"dv-${java.util.UUID.randomUUID}.dvx"
         val out = new java.io.PrintWriter(new java.io.OutputStreamWriter(
           fs.create(new Path(base, dvName), false), "UTF-8"))
         try all.forEach(p => out.println(p)) finally out.close()
-        (name, dvName, dels.size.toLong)
+        dvs += name -> dvName
       }
+      Iterator(DmlTally(sink.entry.toSeq, dvs.result(), counts))
+    }(org.apache.spark.sql.Encoders.javaSerialization(classOf[DmlTally]))
       .collect()
+      .foldLeft(DmlTally(Seq.empty, Map.empty,
+        new Array[Long](TallyChecks + nChecks)))(_ + _)
   }
 
   /** GENERAL MERGE — the full ANSI/Delta clause matrix over a GDX
@@ -4595,10 +4667,20 @@ object GdxSource {
     * Delta/ANSI ambiguous-merge error) instead of applying an
     * arbitrary winner.
     *
+    * Execution shape: ONE Spark action after the optional key pre-scan.
+    * The joined frame is classified per row (`__m`/`__n`/`__b`: the
+    * applied clause of each branch), projected to its position, its
+    * op, its new image and its CHECK flags, and repartitioned by
+    * target file; each task writes its images and the DV sidecars of
+    * its files and returns counts (see [[dmlPass]]). The driver then
+    * raises, in order, the cardinality error, a NULL-key refusal and a
+    * CHECK violation; a refused merge commits nothing and leaves only
+    * orphans for [[vacuum]].
+    *
     * 100 TB shape: the cost driver is one shuffle join of target and
     * source on the merge key plus data files proportional to AFFECTED
     * rows — never a table rewrite. When `pruneKeySql` is given (the ON
-    * condition is an equality on the table's key column) and no
+    * condition is an equality on the table's integral key column) and no
     * NOT-MATCHED-BY-SOURCE clause forces a whole-table walk, candidate
     * files are pre-pruned by the manifest's key zone maps against the
     * source's key range: files that cannot contain a match are carried
@@ -4618,18 +4700,15 @@ object GdxSource {
     import org.apache.spark.sql.functions._
     val conf0 = driverConf()
     val sconf = new SerializableHadoopConf(conf0)
-    // materialized once: every retry and every downstream pass below
-    // must see the same source rows (a lazy source re-scanning a live
-    // table across a CAS retry would tear the statement's snapshot).
-    // LAZY checkpoint: the first consuming job (the source-key min/max
-    // pre-scan, or the joined frame's own materializing aggregate —
-    // every path below drains the source fully) caches the blocks, so
-    // no separate materialization job runs; the snapshot is pinned from
-    // that first action on, which is still before any manifest publish.
-    // presence marker name can never collide with a renamed user
-    // column: the DML rule prefixes source columns `__s_<name>`, so a
-    // source column would have to be literally named "_gdx_present"
-    // to land on `__s__gdx_present` — still distinct from this
+    // the source is pinned once, across CAS retries: a lazy source
+    // re-scanning a live table across a retry would tear the
+    // statement's snapshot. The checkpoint is LAZY — the first action
+    // that drains the source (the key pre-scan, or the write pass)
+    // caches its blocks, which is still before any manifest publish.
+    // The presence marker can never collide with a renamed user column:
+    // the DML rule prefixes source columns `__s_<name>`, so a source
+    // column would have to be literally named "_gdx_present" to land on
+    // `__s__gdx_present` — still distinct from this
     val src = source.localCheckpoint(eager = false)
       .withColumn("__gdx_s_present", lit(true))
     val root = java.util.Locale.ROOT
@@ -4658,7 +4737,8 @@ object GdxSource {
       // BY REFERENCE (never opened) — the range-scoped point-update
       // MERGE touches the day's files, not the decade's. Stats-less
       // legacy files always stay candidates (absence means "cannot
-      // prune", never "skip").
+      // prune", never "skip"). Only an integral key has a k-range, so
+      // the DML rule passes no window for any other key type.
       val (cands, carried) =
         if (notMatchedBySource.nonEmpty ||
             (pruneKeySql.isEmpty && staticLo.isEmpty && staticHi.isEmpty))
@@ -4679,7 +4759,6 @@ object GdxSource {
           entries.partition(e =>
             e.stats.forall(s => s.minK <= hi && s.maxK >= lo))
         }
-      val dvByName = cands.map(e => e.name -> e.dv).toMap
       val target = liveFrame(spark, dir, cands, tblSchema, sconf,
         tblColmap)
         .select(col("_file") +: col("_pos") +:
@@ -4697,25 +4776,17 @@ object GdxSource {
             when(c.condSql.map(expr(_)).getOrElse(lit(true)), lit(i))
               .otherwise(rest)
         }
-      // one materialization of the joined + classified frame; every
-      // pass below (cardinality, DVs, images, metrics) scans it. The
-      // join keeps only the sides the clause matrix can touch: a
-      // matched-only merge never materializes the unmatched bulk of a
-      // large target (inner), INSERT-bearing merges keep unmatched
-      // source rows (right), NOT MATCHED BY SOURCE must see every
-      // live target row (left/full) — semantics identical, the
-      // checkpointed row set is what shrinks
+      // the join keeps only the sides the clause matrix can touch: a
+      // matched-only merge never reads the unmatched bulk of a large
+      // target into the pass (inner), INSERT-bearing merges keep
+      // unmatched source rows (right), NOT MATCHED BY SOURCE must see
+      // every live target row (left/full)
       val joinType = (notMatched.nonEmpty, notMatchedBySource.nonEmpty) match {
         case (true, true)   => "full_outer"
         case (true, false)  => "right_outer"
         case (false, true)  => "left_outer"
         case (false, false) => "inner"
       }
-      // LAZY checkpoint: the first full-drain aggregate below (the
-      // cardinality check when matched clauses exist, otherwise the
-      // ins/upd/del counts — both consume every partition, no limits)
-      // doubles as the materializing action, so the merge pays one
-      // fewer job + driver gap per statement than an eager checkpoint.
       val ann = target.join(src, expr(onSql), joinType)
         .withColumn("__m",
           when(tPresent && sPresent, firstMatch(matched)).otherwise(-1))
@@ -4724,83 +4795,74 @@ object GdxSource {
         .withColumn("__b",
           when(tPresent && !sPresent, firstMatch(notMatchedBySource))
             .otherwise(-1))
-        .localCheckpoint(eager = false)
-      if (matched.nonEmpty) {
-        // no limit(1): a local limit would stop each partition's scan
-        // early and leave the lazy checkpoint's blocks partial
-        val dup = ann.filter(tPresent && sPresent)
-          .groupBy("_file", "_pos").count()
-          .filter(col("count") > 1).count()
-        if (dup > 0) throw new GdxMergeCardinalityException(
-          "gdx merge: the ON condition matched a target row to more " +
-            "than one source row — an UPDATE/DELETE would be ambiguous")
-      }
-      val mUpd = matched.zipWithIndex.collect {
-        case (c, i) if c.assigns.isDefined => i }
-      val bUpd = notMatchedBySource.zipWithIndex.collect {
-        case (c, i) if c.assigns.isDefined => i }
-      def inIdx(c: org.apache.spark.sql.Column, idx: Seq[Int])
-          : org.apache.spark.sql.Column =
+      def inIdx(c: org.apache.spark.sql.Column, clauses: Seq[GdxMergeClause])
+          : org.apache.spark.sql.Column = {
+        val idx = clauses.zipWithIndex.collect {
+          case (cl, i) if cl.assigns.isDefined => i }
         if (idx.isEmpty) lit(false) else idx.map(c === _).reduce(_ || _)
-      val updFlag = inIdx(col("__m"), mUpd) || inIdx(col("__b"), bUpd)
-      val delFlag = (col("__m") >= 0 || col("__b") >= 0) && !updFlag
-      val counts = ann.agg(
-        count(when(col("__n") >= 0, 1)).as("ins"),
-        count(when(updFlag, 1)).as("upd"),
-        count(when(delFlag, 1)).as("del")).head()
-      val (nIns, nUpd, nDel) =
-        (counts.getLong(0), counts.getLong(1), counts.getLong(2))
-      if (nIns + nUpd + nDel == 0) return (readV, 0L, 0L, 0L)
-      // new row images, schema order: SQL simultaneous-assignment
-      // semantics — every value evaluates against the OLD joined row
-      def images(clauses: Seq[GdxMergeClause], act: String,
-                 fallback: StructField => org.apache.spark.sql.Column)
-          : Seq[org.apache.spark.sql.DataFrame] =
-        clauses.zipWithIndex.collect {
-          case (cl, i) if cl.assigns.isDefined =>
-            val byName = cl.assigns.get.map {
-              case (k, v) => k.toLowerCase(root) -> v }.toMap
-            ann.filter(col(act) === i).select(tblSchema.fields.map { f =>
-              byName.get(f.name.toLowerCase(root))
-                .map(sql => expr(sql).cast(f.dataType).as(f.name))
-                .getOrElse(fallback(f).as(f.name))
-            }.toSeq: _*)
-        }
-      val imgs =
-        images(matched, "__m", f => col("__t_" + f.name)) ++
-        images(notMatched, "__n", f => lit(null).cast(f.dataType)) ++
-        images(notMatchedBySource, "__b", f => col("__t_" + f.name))
-      val rewrittenEntries: Seq[GdxFileEntry] =
-        imgs.reduceOption(_.unionByName(_)) match {
-          case None => Seq.empty
-          case Some(newRows) =>
-            // one aggregate job gates the write: non-null key (the
-            // line format requires it) + every CHECK constraint over
-            // the merged images — a violation aborts with nothing
-            // committed
-            val keyName = tblSchema.fields.head.name
-            val aggs = count(when(col(keyName).isNull, 1)).as("__k") +:
-              checks.map { case (n, sql) =>
-                count(when(not(coalesce(expr(sql), lit(true))), 1)).as(n) }
-            val gate = newRows.agg(aggs.head, aggs.tail.toSeq: _*).head()
-            if (gate.getLong(0) > 0) throw new IllegalArgumentException(
-              s"gdx merge: ${gate.getLong(0)} merged row(s) have a NULL " +
-                s"key ($keyName) — the key column is required")
-            checks.zipWithIndex.foreach { case ((n, sql), i) =>
-              val bad = gate.getLong(i + 1)
-              if (bad > 0) throw new GdxConstraintViolationException(
-                s"gdx merge: $bad merged row(s) would violate CHECK " +
-                  s"constraint $n ($sql)")
-            }
-            writeDataFiles(newRows, dir, tblSchema, sconf, tblColmap)
-        }
-      val newDvs = writeDvSidecars(
-        ann.filter(col("__m") >= 0 || col("__b") >= 0)
-          .select("_file", "_pos"), dir, dvByName, sconf)
-      val dvFor = newDvs.map(r => r._1 -> r._2).toMap
-      val updated = carried ++ cands.map(e =>
-        dvFor.get(e.name).map(d => e.copy(dv = Some(d))).getOrElse(e)) ++
-        rewrittenEntries
+      }
+      val updFlag = inIdx(col("__m"), matched) ||
+        inIdx(col("__b"), notMatchedBySource)
+      val op = when(col("__n") >= 0, lit(DmlInsert))
+        .when(updFlag, lit(DmlUpdate))
+        .when(col("__m") >= 0 || col("__b") >= 0, lit(DmlDelete))
+        .otherwise(lit(0))
+      // new row image per column, schema order: the applied clause's
+      // assignment, else the old target value (UPDATE) or NULL
+      // (INSERT) — SQL simultaneous-assignment semantics, every value
+      // evaluates against the OLD joined row
+      def image(f: StructField): org.apache.spark.sql.Column = {
+        def arms(clauses: Seq[GdxMergeClause], act: String,
+                 fallback: org.apache.spark.sql.Column)
+            : Seq[(org.apache.spark.sql.Column, org.apache.spark.sql.Column)] =
+          clauses.zipWithIndex.collect {
+            case (cl, i) if cl.assigns.isDefined =>
+              val byName = cl.assigns.get.map {
+                case (k, v) => k.toLowerCase(root) -> v }.toMap
+              (col(act) === i, byName.get(f.name.toLowerCase(root))
+                .map(expr(_).cast(f.dataType)).getOrElse(fallback))
+          }
+        val old = col("__t_" + f.name)
+        (arms(matched, "__m", old) ++
+          arms(notMatched, "__n", lit(null).cast(f.dataType)) ++
+          arms(notMatchedBySource, "__b", old))
+          .foldRight(lit(null).cast(f.dataType)) {
+            case ((c, v), rest) => when(c, v).otherwise(rest) }
+          .as(f.name)
+      }
+      // inserts carry no `_file`: they spread by a hash of their
+      // hashable source columns (deterministic, so a retried stage
+      // routes every row as before)
+      def hashable(dt: DataType): Boolean = dt match {
+        case _: MapType | VariantType => false
+        case a: ArrayType => hashable(a.elementType)
+        case st: StructType => st.fields.forall(f => hashable(f.dataType))
+        case _ => true
+      }
+      val spreadCols = source.schema.fields.toSeq
+        .filter(f => hashable(f.dataType)).map(f => col(f.name))
+      val spread = if (spreadCols.isEmpty) lit(0) else hash(spreadCols: _*)
+      // every matched pair stays in the pass when MATCHED clauses
+      // exist, touched or not: the cardinality check counts them all
+      val checkPairs = matched.nonEmpty
+      val pair = tPresent && sPresent
+      val pass = ann
+        .select(tblSchema.fields.toSeq.map(image) ++ Seq(col("_file"),
+          col("_pos"), op.as("__op"), pair.as("__pair"),
+          spread.as("__h")): _*)
+        .filter(if (checkPairs) col("__op") > 0 || col("__pair")
+                else col("__op") > 0)
+      val t = dmlPass(pass, dir, tblSchema, tblColmap, sconf, checks,
+        cands.map(e => e.name -> e.dv).toMap,
+        byFile = true, checkPairs = checkPairs)
+      // a target row matched by more than one source row is refused
+      // before any other check
+      if (t.dups > 0) throw new GdxMergeCardinalityException(
+        "gdx merge: the ON condition matched a target row to more " +
+          "than one source row — an UPDATE/DELETE would be ambiguous")
+      t.refuse("merge", "merged", tblSchema, checks)
+      if (t.ins + t.upd + t.del == 0) return (readV, 0L, 0L, 0L)
+      val updated = carried ++ t.withDvs(cands) ++ t.files
       val lines = headerLines(tblSchema, checks, tblColmap,
         committedPartitionCol(dir, conf0, ver)) ++
         updated.sortBy(_.name).map(_.manifestLine)
@@ -4808,7 +4870,7 @@ object GdxSource {
       val fs = base.getFileSystem(conf0)
       if (publishExclusive(fs, conf0, manifestFor(dir, readV + 1), lines)) {
         writeLines(fs, manifest(dir), lines)
-        return (readV + 1, nIns, nUpd, nDel)
+        return (readV + 1, t.ins, t.upd, t.del)
       }
       attempt += 1 // lost the race; orphan sidecars/files await vacuum
       if (attempt > maxRetries) throw new GdxConcurrentModificationException(
@@ -4874,21 +4936,93 @@ object GdxSource {
     spark.createDataFrame(rdd, liveSchema)
   }
 
+  /** Whether a key (first) column of type `dt` has a k-range: only an
+    * integral key's zone map bounds its values, so only an integral
+    * key may drive k-window pruning. */
+  private[graft] def integralKey(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  /** Task-side writer of ONE GDX data file, the rewrite sink of DML,
+    * OPTIMIZE and transaction COMMIT: renders each external row whose
+    * first columns are the table's (schema order; trailing columns are
+    * ignored) as a line, and accumulates the file's zone map and
+    * extended stats. The file is created on the first row under a
+    * UUID name (a `col=key/` `namePrefix` keeps a partitioned rewrite
+    * inside its directory, so the name still proves its key), and
+    * becomes committed only when the caller's manifest publish wins.
+    * A non-integral key publishes the full k-range, which no k-window
+    * or k-predicate can prune. Keys must be non-NULL. */
+  private[graft] final class DataFileSink(dirStr: String,
+      tblSchema: StructType, layout: Array[Int], lanes: Array[StatLane],
+      conf: Configuration, namePrefix: String) {
+    private val types = tblSchema.fields.map(_.dataType)
+    private val intKey = integralKey(types(0))
+    private var name: String = _
+    private var counter: CountingOutputStream = _
+    private var out: java.io.PrintWriter = _
+    private var n = 0L
+    private var mn = Long.MaxValue
+    private var mx = Long.MinValue
+    private val acc = new ExtStatAcc(lanes.length, lanes.map(_.kind))
+
+    def add(r: org.apache.spark.sql.Row): Unit = {
+      require(!r.isNullAt(0), "gdx write: the key must not be null")
+      if (out == null) {
+        name = s"${namePrefix}upd-${java.util.UUID.randomUUID}.gdx"
+        val p = entryPath(dirStr, name)
+        counter = new CountingOutputStream(p.getFileSystem(conf).create(p, false))
+        out = new java.io.PrintWriter(new java.io.OutputStreamWriter(
+          counter, "UTF-8"))
+      }
+      val sb = new java.lang.StringBuilder
+      var pSlot = 0
+      while (pSlot < layout.length) {
+        if (pSlot > 0) sb.append('\t')
+        val i = layout(pSlot)
+        if (i < 0 || r.isNullAt(i)) sb.append(NullMarker)
+        else appendExternalCell(sb, types(i), r, i, "update",
+          tblSchema(i).name)
+        pSlot += 1
+      }
+      out.println(sb)
+      n += 1
+      if (intKey) {
+        val k = r.get(0).asInstanceOf[Number].longValue
+        if (k < mn) mn = k
+        if (k > mx) mx = k
+      }
+      var e = 0
+      while (e < lanes.length) {
+        addLaneExternal(acc, e, lanes(e), r)
+        e += 1
+      }
+    }
+
+    def close(): Unit = if (out != null) out.close()
+
+    /** The written file's manifest entry (after [[close]]); None when no
+      * row arrived and so no file exists. */
+    def entry: Option[GdxFileEntry] = Option(name).map { nm =>
+      val (lo, hi) = if (intKey) (mn, mx) else (Long.MinValue, Long.MaxValue)
+      GdxFileEntry(nm, Some(GdxFileStats(n, lo, hi,
+        acc.result(e => lanes(e).name), Map.empty, Some(counter.count))),
+        enc = Some(EscCodec))
+    }
+  }
+
   /** Write `rows` (in `tblSchema` column order) as GDX line files, one
-    * per non-empty partition, executor-side with UUID names; returns
-    * the manifest entries (zone-map stats included). Used by UPDATE's
-    * rewrite half — the files become committed only when the caller's
-    * manifest publish wins. */
+    * per non-empty partition, through [[DataFileSink]]; returns the
+    * manifest entries (zone-map stats included). Used by OPTIMIZE and
+    * transaction COMMIT — the files become committed only when the
+    * caller's manifest publish wins. */
   private def writeDataFiles(rows: org.apache.spark.sql.DataFrame,
                              dirStr: String, tblSchema: StructType,
                              sconf: SerializableHadoopConf,
                              colmap: Option[Colmap] = None,
                              namePrefix: String = "")
       : Seq[GdxFileEntry] = {
-    val types = tblSchema.fields.map(_.dataType)
-    // shredded columns re-derive from their variant source before the
-    // rows render (generated-always — a rewrite can never drift them)
-    val rows2 = deriveShreds(rows, tblSchema)
     // physical slot -> logical field (-1 = dead slot, written \N)
     val layout = writeLayout(tblSchema, colmap)
     // extended stats like the main writer (numeric non-key columns,
@@ -4897,48 +5031,14 @@ object GdxSource {
     // v..v range on these stats is what keeps updated rows PRUNABLE —
     // without them every p = x query would plan every upd file forever
     val lanes: Array[StatLane] = statLanes(tblSchema)
-    rows2.rdd.mapPartitions { it =>
-      if (!it.hasNext) Iterator.empty
-      else {
-        // a `col=key/` prefix keeps a partitioned rewrite INSIDE its
-        // directory, so the name still proves its key (SPJ, slices)
-        val name = s"${namePrefix}upd-${java.util.UUID.randomUUID}.gdx"
-        val p = GdxSource.entryPath(dirStr, name)
-        val fs = p.getFileSystem(sconf.conf)
-        val counter = new CountingOutputStream(fs.create(p, false))
-        val out = new java.io.PrintWriter(new java.io.OutputStreamWriter(
-          counter, "UTF-8"))
-        var n = 0L; var mn = Long.MaxValue; var mx = Long.MinValue
-        val acc = new ExtStatAcc(lanes.length, lanes.map(_.kind))
-        try it.foreach { r =>
-          val sb = new java.lang.StringBuilder
-          var pSlot = 0
-          while (pSlot < layout.length) {
-            if (pSlot > 0) sb.append('\t')
-            val i = layout(pSlot)
-            if (i < 0 || r.isNullAt(i)) sb.append(GdxSource.NullMarker)
-            else appendExternalCell(sb, types(i), r, i, "update",
-              tblSchema(i).name)
-            pSlot += 1
-          }
-          out.println(sb)
-          val k = r.getLong(0)
-          n += 1
-          if (k < mn) mn = k
-          if (k > mx) mx = k
-          var e = 0
-          while (e < lanes.length) {
-            addLaneExternal(acc, e, lanes(e), r)
-            e += 1
-          }
-        } finally out.close()
-        val ext = acc.result(e => lanes(e).name)
-        Iterator((name, n, mn, mx, ext, counter.count))
-      }
-    }.collect().toSeq.map { case (name, n, mn, mx, ext, bytes) =>
-      GdxFileEntry(name, Some(GdxFileStats(n, mn, mx, ext,
-        Map.empty, Some(bytes))), enc = Some(EscCodec))
-    }
+    // shredded columns re-derive from their variant source before the
+    // rows render (generated-always — a rewrite can never drift them)
+    deriveShreds(rows, tblSchema).rdd.mapPartitions { it =>
+      val sink = new DataFileSink(dirStr, tblSchema, layout, lanes,
+        sconf.conf, namePrefix)
+      try it.foreach(sink.add) finally sink.close()
+      sink.entry.iterator
+    }.collect().toSeq
   }
 
   /** SHALLOW CLONE: a new table whose first manifest references the
@@ -8016,6 +8116,14 @@ class GdxFileReader(file: String, pushed: Array[Filter], limit: Int,
   private var emitted = 0L
   var lastK: Long = _
   var lastV: String = _
+  // the key cell parses as a long for the pushed k-predicates and the
+  // k aggregates; a key with no long form (a STRING natural key) is
+  // never parsed — no k-literal pushdown can target it
+  private val longKey = tableSchema.fields.head.dataType match {
+    case LongType | IntegerType | ShortType | ByteType | DateType |
+         TimestampType => true
+    case _ => false
+  }
 
   private def project(fields: Array[String]): InternalRow = {
     val vals = new Array[Any](slots.length)
@@ -8062,7 +8170,7 @@ class GdxFileReader(file: String, pushed: Array[Filter], limit: Int,
       if (!deleted.contains(lineIdx)) {
         val fields = line.split("\t", -1)
         if (fields.length >= 2 && fields(0).nonEmpty) {
-          val k = fields(0).toLong
+          val k = if (longKey) fields(0).toLong else 0L
           val v = fields(1)
           if (keep(k, v)) {
             lastK = k; lastV = v

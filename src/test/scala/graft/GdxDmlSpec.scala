@@ -99,6 +99,31 @@ class GdxDmlSpec extends SparkSuite {
     } finally s.sql("DROP TABLE IF EXISTS gdxdml_swap")
   }
 
+  test("UPDATE and DELETE with BETWEEN over qualified columns") {
+    val dir = freshDir("dmlbetween")
+    s.sql(s"""CREATE TABLE gdxdml_btw (id BIGINT, cc STRING,
+      exchangedate DATE, rate DOUBLE)
+      USING graft.sources.GdxSource OPTIONS (path '$dir')""")
+    try {
+      s.sql("""INSERT INTO gdxdml_btw VALUES
+        (1, 'USD', DATE'2024-01-02', 41.1D), (2, 'USD', DATE'2024-01-05', 41.4D),
+        (3, 'EUR', DATE'2024-01-02', 45.2D), (4, 'EUR', DATE'2024-01-09', 45.9D)""")
+      // BETWEEN prints its parameters, not its children: their table
+      // qualifiers must be stripped too
+      val upd = s.sql("""UPDATE gdxdml_btw SET rate = rate * 2
+        WHERE cc = 'USD' AND exchangedate BETWEEN DATE'2024-01-01'
+        AND DATE'2024-01-03'""").collect()
+      assert(upd.head.getLong(1) === 1)
+      val del = s.sql("""DELETE FROM gdxdml_btw
+        WHERE gdxdml_btw.id BETWEEN 3 AND 10 AND exchangedate > DATE'2024-01-03'""")
+        .collect()
+      assert(del.head.getLong(1) === 1)
+      assert(s.sql("SELECT id, rate FROM gdxdml_btw ORDER BY id").collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toSeq ===
+        Seq(1L -> 82.2, 2L -> 41.4, 3L -> 45.2))
+    } finally s.sql("DROP TABLE IF EXISTS gdxdml_btw")
+  }
+
   test("non-GDX targets pass through to Spark's own handling") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("gdxdml_pq").toString
