@@ -209,4 +209,14 @@ object GraftSession {
       // ~12% in doCompile on repeat runs). Scale-neutral: the cache is
       // per-JVM and bounded.
       .config("spark.sql.codegen.cache.maxEntries", "4000")
+      // one executor class loader for every session: with artifact
+      // isolation on, each Sessions.pinned clone gets its own session
+      // UUID, hence its own executor class loader, and the codegen
+      // cache (keyed on loader + code) misses — every scoped query
+      // recompiled all its codegen units on every run, other tasks
+      // parked on the cache's key lock meanwhile. The engine adds no
+      // per-session jars/files/artifacts, so isolation bought nothing.
+      // Spark reads this conf only when a session is created, so it
+      // belongs here (SparkConf), not in a clone's runtime conf.
+      .config("spark.sql.artifact.isolation.enabled", "false")
 }

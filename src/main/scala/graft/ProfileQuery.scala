@@ -1,13 +1,17 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Measurement harness (guide §1): run one named query warm, then once
   * more under a listener that records every Spark job's wall span, and
   * print the job timeline plus the DRIVER GAPS between jobs — the
   * split that says whether a query's time goes to task execution or to
   * driver-side work (planning, manifest I/O, commit protocol) between
-  * jobs. Not part of the driver contract; a profiling tool only.
+  * jobs. Each rep's line also carries its codegen compile count and
+  * compile ms, so a codegen-cache miss regression shows without a JFR
+  * session. Not part of the driver contract; a profiling tool only.
   *
   * Usage: ProfileQuery <queryName> [sfDir] [reps]
   */
@@ -154,6 +158,8 @@ object ProfileQuery {
     var r = 0
     while (r < reps) {
       order.clear(); jobs.clear()
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e6
@@ -163,8 +169,14 @@ object ProfileQuery {
         while (it.hasNext) b += it.next(); b.result().sortBy(_.start)
       }
       val jobTotal = js.map(j => math.max(0L, j.end - j.start)).sum
+      // JVM-wide codegen cache misses during the rep (driver + local
+      // executors): a warm rep of a cached plan compiles nothing, so a
+      // nonzero count here is a recompile regression
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
       println(f"== $name rep$r wall=${wall}%.0f ms, ${js.size} jobs, " +
-        f"sum(job spans)=$jobTotal ms ==")
+        f"sum(job spans)=$jobTotal ms, codegen compiles=$compiles " +
+        f"(${compileMs}%.0f ms) ==")
       var cursor = if (js.nonEmpty) js.head.start else 0L
       var gapTotal = 0L
       js.foreach { j =>

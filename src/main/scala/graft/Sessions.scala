@@ -22,6 +22,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * matter how the scheduler interleaves them. Nothing is ever restored
   * because nothing shared is ever touched.
   *
+  * Clones share the executor class loader, and with it the codegen
+  * cache (keyed on class loader + code), only because [[GraftSession]]
+  * builds the context with `spark.sql.artifact.isolation.enabled=false`.
+  * Under a foreign session that keeps artifact isolation on, each clone
+  * gets its own session UUID and executor class loader, so every
+  * scoped query recompiles all its codegen units on every run.
+  *
   * At cluster scale the same discipline is what multi-tenant Spark
   * servers (Thrift/Connect) do per user session — conf isolation by
   * session object, one shared context underneath.

@@ -10,6 +10,8 @@ import org.apache.spark.util.SerializableConfiguration
 
 import graft.sources.SerializableHadoopConf
 
+import scala.util.control.NonFatal
+
 /** V1 file writes (parquet/csv/json sinks) ship the Hadoop
   * Configuration INSIDE the task closure: `WriteJobDescription` holds a
   * bare [[SerializableConfiguration]] (no broadcast — unlike the scan
@@ -78,7 +80,7 @@ class GraftWriteFilesExec(
           }
           c = c.getSuperclass
         }
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
     }
     val fast = new WriteJobDescription(d.uuid,
       new SameJvmWriteConf(d.serializableHadoopConf.value),

@@ -98,10 +98,18 @@ object StreamingOps extends QueryModule {
     // on stderr always, and escalated to a hard failure under
     // SPARK_GRAFT_STREAM_STRICT (set it to allowlist via
     // "name1,name2" when a query legitimately emits nothing).
-    val inputRows = q.recentProgress.map(_.numInputRows).sum
-    if (inputRows > 0 && scoped.table(name).isEmpty) {
+    // Emitted rows come from the sink's own progress counts, so the
+    // check costs no Spark job; only a sink that reports -1 (unknown)
+    // falls back to a job over the table.
+    val progress = q.recentProgress
+    val inputRows = progress.map(_.numInputRows).sum
+    val outputRows = progress.map(_.sink.numOutputRows)
+    lazy val emittedNothing =
+      if (outputRows.exists(_ < 0)) scoped.table(name).isEmpty
+      else outputRows.sum == 0
+    if (inputRows > 0 && emittedNothing) {
       val msg = s"[stream-watchdog] $name consumed $inputRows input rows " +
-        s"across ${q.recentProgress.length} micro-batches but emitted 0 " +
+        s"across ${progress.length} micro-batches but emitted 0 " +
         "output rows (mode=" + mode + ") — watermark/time-unit bug?"
       Console.err.println(msg)
       val strict = sys.env.get("SPARK_GRAFT_STREAM_STRICT")

@@ -7,9 +7,13 @@ class SessionSpec extends AnyFunSuite {
 
   // extensions only apply at session BUILD time — getOrCreate would
   // silently reuse the suite-shared session, so stop it first (suites
-  // run sequentially; later suites rebuild via their own getOrCreate)
+  // run sequentially; later suites rebuild via their own getOrCreate).
+  // Stop the default session too: a SparkContext left running would be
+  // reused, and the builder's creation-time SparkConf entries (artifact
+  // isolation) would never apply.
   private lazy val gspark = {
     org.apache.spark.sql.SparkSession.getActiveSession.foreach(_.stop())
+    org.apache.spark.sql.SparkSession.getDefaultSession.foreach(_.stop())
     org.apache.spark.sql.SparkSession.clearActiveSession()
     org.apache.spark.sql.SparkSession.clearDefaultSession()
     GraftSession.builder(cores = 2).appName("graft-ext-test").getOrCreate()
@@ -111,6 +115,55 @@ class SessionSpec extends AnyFunSuite {
     // and with a previous session it restores that one
     Sessions.withActive(clone)(())
     // (the suite thread keeps whatever it had — no assertion flake)
+  }
+
+  test("pinned clones share the codegen cache: a repeat scoped query " +
+      "compiles nothing") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // with artifact isolation on, every clone gets its own executor
+    // class loader and the (loader, code)-keyed codegen cache misses
+    assert(gspark.conf.get("spark.sql.artifact.isolation.enabled") === "false")
+    def scopedAgg(): Array[org.apache.spark.sql.Row] =
+      Sessions.pinned(gspark, "spark.sql.shuffle.partitions" -> "3")
+        .range(0, 1000, 1, 2)
+        .selectExpr("id % 7 AS g", "id * 3 AS v")
+        .groupBy("g").agg(org.apache.spark.sql.functions.sum("v"))
+        .collect()
+    val first = scopedAgg()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = scopedAgg()
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiles === 0L,
+      "the second pinned clone recompiled the same aggregate")
+    assert(second.sortBy(_.getLong(0)).toSeq ===
+      first.sortBy(_.getLong(0)).toSeq)
+  }
+
+  test("runToMemory watchdog: flags a stream that consumes rows but " +
+      "emits none, stays quiet when rows are emitted") {
+    import org.apache.spark.sql.functions.col
+    val dir = Scratch.dir("graft_watchdog_").getPath
+    gspark.range(0, 50, 1, 2).write.mode("overwrite").parquet(dir)
+    def streamed = gspark.readStream.schema("id BIGINT").parquet(dir)
+    def run(name: String, df: org.apache.spark.sql.DataFrame)
+        : (Long, String) = {
+      val err = new java.io.ByteArrayOutputStream
+      val n = Console.withErr(new java.io.PrintStream(err, true, "UTF-8")) {
+        graft.streaming.StreamingOps.runToMemory(gspark, df, name,
+          mode = "append").count()
+      }
+      (n, err.toString("UTF-8"))
+    }
+    // a predicate parquet row-group stats cannot prune, so the rows
+    // are really read (numInputRows 50) and then all dropped
+    val (dropped, droppedErr) =
+      run("graft_wd_none", streamed.filter(col("id") % 7 === 100))
+    assert(dropped === 0L)
+    assert(droppedErr.contains("[stream-watchdog] graft_wd_none consumed 50"),
+      droppedErr)
+    val (kept, keptErr) = run("graft_wd_some", streamed)
+    assert(kept === 50L)
+    assert(!keptErr.contains("[stream-watchdog]"), keptErr)
   }
 
   test("pipeline operators tolerate empty inputs") {
